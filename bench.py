@@ -733,7 +733,7 @@ def main() -> None:
     # single-thread-bound), but the core line carried no term to show
     # it. Stamp the core's scheduler share and its data wall so a
     # band breach is attributable from the compact line alone; band
-    # judgment is data-wall-based (BASELINE.md §7).
+    # judgment is data-wall-based (BASELINE.md §15).
     core_sched_wall_s = round(
         sum(s["sched_wall_s"] for n, s in in_suite.items() if n in core_set),
         3,
@@ -777,13 +777,13 @@ def main() -> None:
     # timings instead of comparing counts to counts. The anchor
     # history that used to live in the metric string (r12 new-host
     # anchors: core 105.389s band 80.3-109.5, full suite 353.368s over
-    # the 168-plan union) moved to BASELINE.md §7 + this docstring to
+    # the 168-plan union) moved to BASELINE.md §14/§15 + this docstring to
     # make room; methodology, timed set and scale are UNCHANGED.
     print(
         _compact_line(
             {
                 "metric": "55-plan core wall-clock (noop sink; "
-                "anchors BASELINE.md §7; data-wall judging via "
+                "anchors BASELINE.md §14/§15; data-wall judging via "
                 "*_sched_wall_s; core_key_map in detail)",
                 "value": core_value,
                 "unit": "sec",

@@ -27,7 +27,7 @@ Scale design (the point of each variant):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..caching import (
     track_local_checkpoint,
@@ -185,14 +185,58 @@ def lsh_candidate_pairs(
 LAST_GATE_DECISIONS: list[dict] = []
 
 
-def _verify_size_gate(pairs: DataFrame, shingled: DataFrame) -> bool:
+def _row_bytes_aggs():
+    """(avg, mx) of a shingle row's UnsafeRow-ish footprint: the
+    shingles' characters joined by single separators, + 24/element +
+    80 fixed. The joined length is summed per element — no joined
+    string is built per row."""
+    n = F.size("shingles")
+    chars = F.aggregate(
+        "shingles", F.lit(0).cast("long"), lambda acc, s: acc + F.length(s)
+    )
+    b = chars + F.greatest(n - 1, F.lit(0)) + n * 24 + 80
+    return F.avg(b).alias("avg"), F.max(b).alias("mx")
+
+
+def observe_row_bytes(shingled: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach the size gate's row-byte figures to a shingle frame as an
+    ``Observation``. Persist the returned frame and pass the
+    Observation to ``jaccard_verify``: the first action that
+    materializes the frame (the gate's own ``pairs.count()`` when the
+    candidates derive from it) delivers the figures with no job of
+    their own."""
+    obs = Observation()
+    return shingled.observe(obs, *_row_bytes_aggs()), obs
+
+
+def _observed(obs: Observation, df: DataFrame) -> bool:
+    """Whether ``obs`` has fired or will without another action: its
+    future completed, or ``df``'s cache is fully built — the job that
+    built it ran the observed plan, and the metrics are only waiting
+    on the (asynchronous) listener bus."""
+    if obs._jo.future().isCompleted():
+        return True
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    cached = cm.lookupCachedData(df._jdf)
+    return bool(
+        cached.isDefined()
+        and cached.get().cachedRepresentation().cacheBuilder()
+        .isCachedColumnBuffersLoaded()
+    )
+
+
+def _verify_size_gate(
+    pairs: DataFrame, shingled: DataFrame, row_obs: Observation | None = None
+) -> bool:
     """Decide whether the candidate set is PROVABLY small enough to
     broadcast (fast path) or must take the spill-safe aggregate shape.
 
     The estimate is deliberately pessimistic at every step:
 
-    - per-row bytes = max(2 x sampled avg, sampled max) of the
-      UnsafeRow-ish footprint (string bytes + 24/element + 80 fixed);
+    - per-row bytes = max(2 x avg, max) of the UnsafeRow-ish footprint
+      (string bytes + 24/element + 80 fixed) over the WHOLE shingle
+      frame, so the decision never depends on which rows a shuffle
+      delivers first;
     - the WHOLE estimated build must fit in ONE task's conservative
       execution share (heap x 0.6 unified pool / parallelism) with a
       further /4 safety factor — i.e. we assume AQE could coalesce the
@@ -201,6 +245,14 @@ def _verify_size_gate(pairs: DataFrame, shingled: DataFrame) -> bool:
       the budget is ~9.8 MB; prefix_jaccard at sf0.1 estimates ~300 MB
       and is routed to the aggregate shape, while the banded MinHash
       candidate sets (hundreds of pairs, <1 MB) take the fast path.
+
+    Row sizes are OBSERVED: ``row_obs`` (from ``observe_row_bytes``)
+    rides the job that materializes the persisted shingle frame —
+    ``pairs.count()``, when the candidates derive from it — so the
+    gate costs that one count and nothing else. A frame the count did
+    not materialize (no Observation, or candidates built elsewhere)
+    gets the same two aggregates in one action of their own; the gate
+    never waits on an Observation that has not fired.
 
     Cluster note: in local mode Runtime.maxMemory IS the executor
     heap; on a real cluster this gate runs on the driver, where the
@@ -220,20 +272,13 @@ def _verify_size_gate(pairs: DataFrame, shingled: DataFrame) -> bool:
     n_pairs = pairs.count()  # pairs is persisted by the caller
     if n_pairs == 0:
         return True
-    row_bytes = (
-        F.length(F.concat_ws(" ", "shingles"))
-        + F.size("shingles") * 24
-        + 80
-    ).alias("b")
-    sample = (
-        shingled.select(row_bytes)
-        .limit(2048)
-        .agg(F.avg("b").alias("avg"), F.max("b").alias("mx"))
-        .first()
-    )
-    if sample is None or sample["avg"] is None:
+    if row_obs is not None and _observed(row_obs, shingled):
+        sizes = row_obs.get
+    else:
+        sizes = shingled.agg(*_row_bytes_aggs()).first()
+    if sizes["avg"] is None:
         return False
-    est_row = max(2.0 * float(sample["avg"]), float(sample["mx"]))
+    est_row = max(2.0 * float(sizes["avg"]), float(sizes["mx"]))
     est_total = n_pairs * est_row
     budget_env = os.environ.get("SPARK_GRAFT_VERIFY_BUDGET_BYTES")
     if budget_env:
@@ -279,7 +324,10 @@ def _jaccard_expr(a: str = "sh_a", b: str = "sh_b"):
 
 
 def jaccard_verify(
-    pairs: DataFrame, shingled: DataFrame, threshold: float
+    pairs: DataFrame,
+    shingled: DataFrame,
+    threshold: float,
+    row_obs: Observation | None = None,
 ) -> DataFrame:
     """Exact Jaccard on the candidate pairs: |A∩B| / |A∪B| over the
     distinct-shingle arrays. Output (doc_a, doc_b, jaccard), one row
@@ -302,7 +350,10 @@ def jaccard_verify(
     below, whose every operator degrades gracefully at any candidate
     volume. Measured at sf0.1: MinHash candidates (285 pairs) take the
     fast path; prefix_jaccard's 160k candidates (~300 MB of fat build,
-    the reproduced r10 OOM) stay on shape 3.
+    the reproduced r10 OOM) stay on shape 3. ``row_obs`` is the
+    shingle frame's row-byte Observation (``observe_row_bytes``): pass
+    it when ``shingled`` is persisted and ``pairs`` derive from it, and
+    the gate costs only the candidate count.
 
     Shape history — shape 3 is the third design, and the first whose
     every operator degrades gracefully under memory pressure at any
@@ -347,7 +398,7 @@ def jaccard_verify(
     # executes twice. Tracked — released after the query's action.
     pairs = track_persist(pairs)
 
-    if _verify_size_gate(pairs, shingled):
+    if _verify_size_gate(pairs, shingled, row_obs):
         # Fast path: ZERO-shuffle verify. The candidate side is the
         # broadcast relation in BOTH fetches, so the corpus arrays
         # stream map-side and never hit an exchange; the per-pair
@@ -412,7 +463,9 @@ def minhash_lsh_dedup(
     The shingle frame is persisted (tracked for release after the
     terminal action): it feeds the signature pass once and the Jaccard
     verify twice; recomputing it means re-tokenizing and re-hashing
-    the corpus three times.
+    the corpus three times. Its row-byte Observation rides the same
+    materialization, so the verify's size gate launches only the
+    candidate count.
 
     The input is round-robined up to core count first
     (``readers.ensure_parallelism`` — a no-op whenever the scan
@@ -420,12 +473,13 @@ def minhash_lsh_dedup(
     tokenize + shingle + per-shingle md5 pass is the pipeline's CPU
     stage and otherwise inherits a single-row-group test file's
     1-task partitioning (r15 A/B, scripts/r15_parallelism_ab.py)."""
-    shingled = track_persist(
+    shingled, row_obs = observe_row_bytes(
         with_shingles(ensure_parallelism(df), id_col, text_col, ngram)
     )
+    shingled = track_persist(shingled)
     signed = minhash_signature(shingled, num_hashes)
     pairs = lsh_candidate_pairs(signed, num_hashes, bands)
-    return jaccard_verify(pairs, shingled, threshold)
+    return jaccard_verify(pairs, shingled, threshold, row_obs)
 
 
 def simhash_signature(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
@@ -742,7 +796,10 @@ def prefix_jaccard_pairs(
             f"{threshold!r}"
         )
 
-    shingled = track_persist(with_shingles(df, id_col, text_col, ngram))
+    shingled, row_obs = observe_row_bytes(
+        with_shingles(df, id_col, text_col, ngram)
+    )
+    shingled = track_persist(shingled)
     ex = shingled.select(
         "doc_id",
         F.size("shingles").alias("n_sh"),
@@ -792,7 +849,7 @@ def prefix_jaccard_pairs(
         )
         .distinct()
     )
-    return jaccard_verify(cand, shingled, threshold)
+    return jaccard_verify(cand, shingled, threshold, row_obs)
 
 
 def connected_components(
@@ -809,18 +866,30 @@ def connected_components(
 
     Algorithm: iterative min-label propagation (the iterative-
     algorithm class, like operators/clustering.kmeans_lloyd): each
-    round every node takes min(own label, neighbors' labels); rounds
-    needed = graph diameter, which for near-dup clusters is small. The
-    per-round plan is one join + one groupBy on node ids (never
-    payloads); the driver sees only the single convergence COUNT per
-    round — no data is collected. Every round the label frame is
-    eagerly localCheckpoint-ed: caching alone keeps the DATA but lets
-    the logical plan nest one join deeper per round, and Catalyst
+    round every node takes the min label over its closed neighborhood
+    N(a) ∪ {a}; rounds needed = graph diameter + 1 (the last round
+    confirms the fixpoint), which for near-dup clusters is small.
+    Round 1 reads the symmetric edge frame alone — every label is
+    still the node's own id, so the new label is ``least(a, min(b))``
+    in one groupBy, with no distinct-node pass. Each later round is
+    one join of the edges against the labels plus one groupBy on node
+    ids (never payloads); the node's own label enters the group as a
+    self-loop, so there is no left-join back to the old labels.
+
+    Convergence is OBSERVED, not counted: each round's label frame is
+    eagerly localCheckpoint-ed, and an ``Observation`` of
+    ``sum(comp)`` (as decimal(38,0), exact for any id width) rides
+    that checkpoint's own job. Labels only ever decrease over a fixed
+    node set, so an unchanged sum means no label changed; convergence
+    costs no job of its own and collects no data. The checkpoint
+    is there to truncate lineage: caching alone keeps the DATA but
+    lets the logical plan nest one join deeper per round, and Catalyst
     re-analysis of that tower goes super-linear (measured: a 10-round
-    path graph OOMs the driver without truncation). Lineage
-    truncation, not caching, is what makes iterative DataFrame
-    algorithms viable — on a cluster use checkpoint() to reliable
-    storage for fault tolerance instead.
+    path graph exhausts the JVM heap without truncation). On a cluster
+    use checkpoint() to reliable storage for fault tolerance instead.
+
+    Raises RuntimeError when the ``max_iter``-th round still changes a
+    label (a component's diameter is at least ``max_iter``).
 
     Output: (node, component) for every node that appears in an edge.
     """
@@ -829,56 +898,60 @@ def connected_components(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
         )
     )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("comp"))
-        .localCheckpoint()
+
+    def _label_sum(col: str):
+        return F.sum(F.col(col).cast("decimal(38,0)"))
+
+    def _checkpoint(step: DataFrame, *extra) -> tuple[DataFrame, dict]:
+        obs = Observation()
+        ckpt = step.observe(
+            obs, _label_sum("comp").alias("s"), *extra
+        ).localCheckpoint()  # eager: truncates lineage, fires obs
+        return ckpt, obs.get
+
+    # Round 1; the previous labels are the node ids, whose sum rides
+    # the same checkpoint.
+    labels, m = _checkpoint(
+        sym.groupBy("a").agg(F.least(F.col("a"), F.min("b")).alias("comp"))
+        .select(F.col("a").alias("node"), "comp"),
+        _label_sum("node").alias("s0"),
     )
-    prev_ckpt = labels  # previous round's checkpoint blocks (r5 advice:
-    # each round's localCheckpoint lives OUTSIDE the track_persist
-    # registry; without an explicit release, executor storage grows by
-    # one label-frame per iteration)
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("comp").alias("nmin"))
-        )
-        step = (
-            labels.join(neighbor_min, labels.node == F.col("a"), "left")
-            .select(
-                "node",
-                F.col("comp").alias("old_comp"),
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint()  # eager: truncates lineage, materializes once
-        )
-        changed = step.where(F.col("comp") != F.col("old_comp")).count()
-        unpersist_local_checkpoint(prev_ckpt)  # step is materialized;
-        # the previous round's blocks are dead weight from here on
-        prev_ckpt = step
-        labels = step.select("node", "comp")
-        if changed == 0:
+    changed, last_sum = m["s"] != m["s0"], m["s"]
+    for _ in range(max_iter - 1):
+        if not changed:
             break
-    else:
-        # Falling through with changed > 0 means some component's
+        step = (
+            sym.join(labels, sym.b == labels.node)
+            .select("a", "comp")
+            .unionByName(labels.select(F.col("node").alias("a"), "comp"))
+            .groupBy("a")
+            .agg(F.min("comp").alias("comp"))
+            .select(F.col("a").alias("node"), "comp")
+        )
+        step, m = _checkpoint(step)
+        # step is materialized; the previous round's checkpoint blocks
+        # live outside the track_persist registry (r5 advice) and are
+        # dead weight from here on.
+        unpersist_local_checkpoint(labels)
+        labels = step
+        changed, last_sum = m["s"] != last_sum, m["s"]
+    # The final checkpoint backs the returned frame; released with the
+    # query's other caches once the caller's action completes (or after
+    # the raise below).
+    track_local_checkpoint(labels)
+    if changed:
+        # Stopping with labels still changing means some component's
         # diameter exceeds max_iter and the labels are WRONG (split
         # clusters) — on a production pair graph that is silent
         # over-retention with no signal. Fail loudly instead, like
         # misra_gries_heavy_hitters self-reports its undercount bound.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
-            f"iterations ({changed} labels still changing): a component's "
-            "diameter exceeds max_iter, so returned labels would split "
-            "real clusters. Raise max_iter (rounds needed = graph "
-            "diameter) or pre-contract obvious duplicates."
+            "iterations (labels still changed in the last round): a "
+            "component's diameter exceeds max_iter, so returned labels "
+            "would split real clusters. Raise max_iter (rounds needed = "
+            "graph diameter + 1) or pre-contract obvious duplicates."
         )
-    # The final checkpoint backs the returned frame; released with the
-    # query's other caches once the caller's action completes.
-    track_local_checkpoint(prev_ckpt)
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 
@@ -913,7 +986,9 @@ def connected_components_star(
     pairs only, plus one exact edge-set comparison (exceptAll) for
     convergence — no checksums, no collected data.
 
-    Every round the edge frame is eagerly localCheckpoint-ed: caching
+    Every round the edge frame is eagerly localCheckpoint-ed, and its
+    edge count is an ``Observation`` riding that checkpoint's job (a
+    count mismatch short-circuits the exceptAll). Caching
     alone keeps the DATA but lets the logical plan nest one join
     deeper per round, and Catalyst re-analysis of that tower goes
     super-linear (measured: a 10-round path graph OOMs the driver
@@ -931,14 +1006,21 @@ def connected_components_star(
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
-    e = (
+
+    def _checkpoint(cur: DataFrame) -> tuple[DataFrame, int]:
+        """Eagerly localCheckpoint an edge frame; its row count rides
+        the checkpoint's own job as an Observation."""
+        obs = Observation()
+        ckpt = cur.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        return ckpt, obs.get["n"]
+
+    e, e_count = _checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
         .distinct()
-        .localCheckpoint()
     )
 
     def _star(cur: DataFrame, large: bool) -> DataFrame:
@@ -970,15 +1052,14 @@ def connected_components_star(
         )
 
     converged = False
-    # r14: carry the previous round's edge count in a driver variable
-    # instead of re-counting the (already materialized) old frame every
-    # round — one fewer job per iteration (guide §1.2 step 1: don't
-    # recompute what you already know). e is localCheckpoint-ed, so
-    # count() was cheap but still a full job dispatch per round.
-    e_count = e.count()
+    # Edge counts are observed on each round's own checkpoint job (no
+    # count() dispatch per round); the previous round's count is
+    # carried in a local. Equal counts are necessary, not
+    # sufficient, so the exact exceptAll comparison settles it.
     for _ in range(max_iter):
-        e_new = _star(_star(e, large=True), large=False).localCheckpoint()
-        e_new_count = e_new.count()
+        e_new, e_new_count = _checkpoint(
+            _star(_star(e, large=True), large=False)
+        )
         unchanged = (
             e_new_count == e_count
             and e_new.exceptAll(e).limit(1).count() == 0

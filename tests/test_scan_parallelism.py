@@ -16,10 +16,13 @@ Two properties are load-bearing:
 
 from __future__ import annotations
 
+import pytest
+
 from sp500_stock_etl_spark.caching import release_caches
 from sp500_stock_etl_spark.io import readers as RD
 from sp500_stock_etl_spark.io.readers import ensure_parallelism, load_table
 from sp500_stock_etl_spark.operators import dedup as D
+from sp500_stock_etl_spark.plans import queries_northstar as QN
 from sp500_stock_etl_spark.plans.registry import all_queries
 
 TOUCHED = (
@@ -33,26 +36,35 @@ TOUCHED = (
 )
 
 
+def _rows(spark, sf_dir, name):
+    rows = sorted(map(tuple, all_queries()[name].spark_fn(spark, sf_dir).collect()))
+    release_caches()
+    return rows
+
+
 def test_parallelized_sites_output_identical(spark, sf_dir, monkeypatch):
-    registry = all_queries()
     identity = lambda df, min_partitions=None: df  # noqa: E731
-    for name in TOUCHED:
-        new_rows = sorted(
-            map(tuple, registry[name].spark_fn(spark, sf_dir).collect())
-        )
-        release_caches()
+    # similarity_join_corpus is pinned twice: as registered, and at
+    # threshold 0, where its output is the whole verified candidate
+    # set (the intermediate the threshold filters).
+    cases = [(name, None) for name in TOUCHED]
+    cases.append(("similarity_join_corpus", 0.0))
+    for name, threshold in cases:
         with monkeypatch.context() as m:
+            if threshold is not None:
+                m.setattr(QN, "_SJ_THRESHOLD", threshold)
+            new_rows = _rows(spark, sf_dir, name)
             m.setattr(RD, "ensure_parallelism", identity)
             m.setattr(D, "ensure_parallelism", identity)
-            old_rows = sorted(
-                map(tuple, registry[name].spark_fn(spark, sf_dir).collect())
-            )
-            release_caches()
-        assert old_rows == new_rows, name
-        assert len(new_rows) > 0 or name == "similarity_join_corpus", name
+            old_rows = _rows(spark, sf_dir, name)
+        assert old_rows == new_rows, (name, threshold)
+        # Never empty against empty: every pin compares real rows.
+        assert len(new_rows) > 0, (name, threshold)
 
 
 def test_shingle_stage_parallel_at_test_scale(spark, sf_dir):
+    if spark.sparkContext.defaultParallelism <= 1:
+        pytest.skip("one core: a single scan task is already full parallelism")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Precondition that motivates the change: a single-row-group test
     # file scans as one task.

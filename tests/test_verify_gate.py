@@ -7,14 +7,19 @@ anything the gate cannot bound takes the spill-safe aggregate shape
 2. the gate routes by the byte budget (env-overridable), so the
    prefix_jaccard-style unbounded candidate volume can never reach a
    broadcast build;
-3. empty candidate sets are handled by both shapes.
+3. empty candidate sets are handled by both shapes;
+4. the gate's row sizes ride the job that materializes the shingle
+   frame (no job of their own), and do not depend on row order.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from sp500_stock_etl_spark.caching import release_caches
 from sp500_stock_etl_spark.operators import dedup as D
+from tests.jobgroups import count_jobs, group_jobs, run_in_group
 
 
 def _corpus(spark):
@@ -101,3 +106,101 @@ def test_jaccard_expr_matches_distinct_concat_union(spark):
     ).collect()
     for r in got:
         assert r["new"] == r["old"]  # bitwise (both exact doubles)
+
+
+def _gate_env(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_VERIFY_SHAPE", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_VERIFY_BUDGET_BYTES", raising=False)
+
+
+@pytest.mark.parametrize(
+    "build, jobs",
+    [
+        # The observed row sizes replace the limit(2048) sample job
+        # (the sampled gate made these 9 and 16).
+        (lambda docs: D.minhash_lsh_dedup(docs, "doc_id", "text"), 7),
+        (lambda docs: D.prefix_jaccard_pairs(docs, "doc_id", "text"), 14),
+    ],
+    ids=["minhash_lsh_dedup", "prefix_jaccard_pairs"],
+)
+def test_build_job_count(spark, monkeypatch, build, jobs):
+    """Eager build jobs per call, counted under a job group in the
+    local[8] test session (the returned frame is not acted on)."""
+    _gate_env(monkeypatch)
+    docs = _corpus(spark)
+    _, got = count_jobs(spark, build, docs)
+    release_caches()
+    assert got == jobs
+
+
+def test_unobserved_frame_gate_job_count(spark, monkeypatch):
+    """A bare shingle frame (no Observation) gets its row sizes from
+    one aggregate action over the whole frame, after the count: two
+    jobs each (a shuffle stage and the final stage)."""
+    _gate_env(monkeypatch)
+    sh = D.with_shingles(_corpus(spark), "doc_id", "text", 3)
+    pairs = spark.createDataFrame([(0, 1000), (5, 1005)], "doc_a long, doc_b long")
+    assert count_jobs(spark, D._verify_size_gate, pairs, sh)[1] == 4
+
+
+def test_minhash_gate_launches_no_job_after_candidate_count(spark, monkeypatch):
+    """Everything after the gate's pairs.count() — reading the row
+    sizes, the decision, building the verify plan — launches no Spark
+    job: the row-byte Observation rode the count's job."""
+    _gate_env(monkeypatch)
+    docs = _corpus(spark)
+    sc = spark.sparkContext
+    cls = type(docs)
+    count = cls.count
+    groups = []
+
+    def count_then_regroup(self):
+        n = count(self)
+        groups.append(f"after-count-{len(groups)}")
+        sc.setJobGroup(groups[-1], groups[-1], False)
+        return n
+
+    monkeypatch.setattr(cls, "count", count_then_regroup)
+    D.LAST_GATE_DECISIONS.clear()
+    _, before = run_in_group(spark, D.minhash_lsh_dedup, docs, "doc_id", "text")
+    monkeypatch.undo()
+    release_caches()
+    assert groups == ["after-count-0"], "the gate must count the pairs once"
+    assert D.LAST_GATE_DECISIONS[0]["n_pairs"] > 0
+    assert group_jobs(spark, before) > 0
+    assert group_jobs(spark, groups[0]) == 0
+
+
+def test_gate_estimate_independent_of_row_order(spark, monkeypatch):
+    """The gate reads every row: the same rows arriving in a different
+    order (repartition(1) vs repartition(3)) give the same est_row and
+    decision, on the observed and the unobserved path alike, and
+    est_row is the old per-row formula's max(2 x avg, max) over the
+    whole frame: 3000 rows with one outlier, more rows than the
+    2048-row sample the gate once read."""
+    _gate_env(monkeypatch)
+    n = F.when(F.col("id") == 2999, 400).otherwise(F.col("id") % 40 + 1)
+    sh = spark.range(3000).select(
+        F.col("id").alias("doc_id"),
+        F.array_repeat(F.concat(F.lit("s"), F.col("id").cast("string")), n.cast("int")).alias(
+            "shingles"
+        ),
+    )
+    pairs = spark.createDataFrame([(0, 1), (2, 3)], "doc_a long, doc_b long")
+    ref = sh.select(
+        (F.length(F.concat_ws(" ", "shingles")) + F.size("shingles") * 24 + 80).alias("b")
+    ).agg(F.avg("b").alias("avg"), F.max("b").alias("mx")).first()
+    want = round(max(2.0 * ref["avg"], float(ref["mx"])), 1)
+    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BUDGET_BYTES", str(2 * want + 1))
+
+    D.LAST_GATE_DECISIONS.clear()
+    for parts in (1, 3):
+        shuffled = sh.repartition(parts)
+        D._verify_size_gate(pairs, shuffled)
+        observed, obs = D.observe_row_bytes(shuffled)
+        observed = observed.persist()
+        observed.count()  # materializes the frame: the Observation fires
+        D._verify_size_gate(pairs, observed, obs)
+        observed.unpersist()
+    got = {(r["est_row"], r["fast"]) for r in D.LAST_GATE_DECISIONS}
+    assert got == {(want, True)}
